@@ -115,6 +115,20 @@ def test_merges_txt_round_trip(tmp_path):
         load_merges(str(bad))
 
 
+def test_load_merges_keeps_hash_prefixed_merges(tmp_path):
+    """Only a first-line ``#version`` header is a comment: ``# #`` and
+    ``#a b`` are merges of ``#`` symbols and must survive a round trip."""
+    from validr_spark.operators.bpe import load_merges, save_merges
+
+    merges = [("#", "#"), ("#a", "b"), ("a", "#")]
+    p = str(tmp_path / "merges.txt")
+    save_merges(merges, p)
+    assert load_merges(p) == merges
+    headerless = tmp_path / "headerless.txt"
+    headerless.write_text("# #\n\nab c\n")
+    assert load_merges(str(headerless)) == [("#", "#"), ("ab", "c")]
+
+
 def test_bpe_vocab_ids_are_alphabet_then_merge_order():
     merges = [("a", "b"), ("ab", "c")]
     v = bpe_vocab(merges, ["c", "a", "b"])

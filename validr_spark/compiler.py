@@ -23,14 +23,26 @@ Scale notes (100 TB design): row validation is embarrassingly parallel —
 a single projection over the scan, no shuffle, no driver collect.  Violations
 explode only rows that actually have violations (filter first, then explode),
 so the violations job shuffles ~violation-rate × data, not the full table.
+
+Driver-side build cost grows with fields × checks, and is paid once per
+``apply`` (so once per ``ResumableValidation`` batch).  Rules therefore
+build Spark SQL TEXT (`sqltext`), and ``apply`` hands the JVM one
+expression string per output column (``F.expr``) in a single select: a few
+dozen py4j round trips per plan where the Column API made thousands
+(PERF.md Finding 19).  What remains is Catalyst parsing and analysis,
+linear in the expression size, plus a one-off fill of the SQL parser's
+prediction cache the first time a JVM sees a plan shape.  `sqltext`
+avoids the constructs that make that cache grow with nesting depth.
+Pandas-UDF and Column-API rules run in a pre-projection, referred to by
+column name.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional
+from typing import Callable, Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 
@@ -40,41 +52,46 @@ from .rules import (
     BUILDERS,
     NULL_VIOLATION,
     VIOLATION_TYPE,
-    CoreRule,
+    SqlRule,
     build_pyudf_rule,
+    case,
     chain,
+    column_rule,
     mkviol,
+    type_mismatch,
     value_repr,
 )
 from .schema import Schema, T
+from .sqltext import (and_, building, cast, colref, lam, lit, not_, or_, q,
+                      sql_type, typed_null)
 
 __all__ = ["SparkCompiler", "ValidationPlan", "ValidationResult"]
 
 
 @dataclass
 class NodePlan:
-    """Compiled (value, error) expressions for one schema node."""
+    """Compiled (value, error) SQL-text builders for one schema node."""
 
     output_type: st.DataType
-    value: callable          # (col) -> Column  coerced output
-    error: callable          # (col, pos) -> Column  violation struct | null
+    value: Callable[[str], str]          # (col) -> coerced output
+    error: Callable[[str, str], str]     # (col, pos) -> violation | null
     # boolean predicate: true iff error() is non-null.  Containers scan
     # elements with this (no per-element violation-struct construction).
-    invalid: callable = None
+    invalid: Callable[[str], str] = None
     # whole-array fast paths (see CoreRule) — set only when the wrapper
     # params don't change element semantics (no optional/default/invalid_to)
-    array_invalid: callable = None
-    array_value: callable = None
+    array_invalid: Callable[[str], str] = None
+    array_value: Callable[[str], str] = None
 
 
-_WRAPPER_PARAMS = ("optional", "default", "invalid_to", "invalid_to_default",
-                   "desc", "object")
+def _field(col: str, name: str) -> str:
+    """``col.getField(name)``."""
+    return f"{col}[{lit(name)}]"
 
 
-def _elem_type(input_type) -> st.DataType:
-    if isinstance(input_type, st.ArrayType):
-        return input_type.elementType
-    return st.NullType()
+def _pos(pos: str, suffix: str) -> str:
+    """``concat(pos, suffix)`` with a literal suffix."""
+    return f"concat({pos}, {lit(suffix)})"
 
 
 class SparkCompiler:
@@ -83,9 +100,12 @@ class SparkCompiler:
     ``validators`` may inject custom rule builders with signature
     ``(compiler, schema, input_type, path) -> CoreRule`` — the same extension
     point as the reference's ``Compiler(validators={...})``
-    (schema.py:355-359).  A schema node whose validator is unknown to the
-    expression backend but registered in the Python backend automatically
-    falls back to a vectorized pandas-UDF rule.
+    (schema.py:355-359).  A builder returns either a `SqlRule` (SQL-text
+    callbacks, usable anywhere) or a `CoreRule` with pyspark-Column
+    callbacks, which is evaluated in a pre-projection and so cannot
+    validate list items or map entries (MIGRATION.md).  A schema node whose
+    validator is unknown to the expression backend but registered in the
+    Python backend automatically falls back to a vectorized pandas-UDF rule.
     """
 
     def __init__(self, validators: dict | None = None,
@@ -133,12 +153,14 @@ class SparkCompiler:
                 else:
                     raise SchemaError(f"validator {v!r} not found")
             core = builder(self, schema, input_type, path)
+            if not isinstance(core, SqlRule):
+                core = column_rule(core, path)
         return self._wrap(core, schema, input_type, path)
 
     # ------------------------------------------------------------------
     # the cross-cutting null/default/invalid_to wrapper (pyx:381-421)
     # ------------------------------------------------------------------
-    def _wrap(self, core: CoreRule, schema: Schema,
+    def _wrap(self, core: SqlRule, schema: Schema,
               input_type: st.DataType, path: str) -> NodePlan:
         params = schema.params
         optional = bool(params.get("optional", False))
@@ -150,17 +172,18 @@ class SparkCompiler:
         else:
             has_default = default is not None
         suppress = has_invalid_to or invalid_to_default
+        nullable = has_default or optional
 
         # pre-validated fallback literals via the python backend
         py_validate = self._py.compile(schema)
-        null_result = py_validate(None) if (has_default or optional) else None
+        null_result = py_validate(None) if nullable else None
         fallback = py_validate(params["invalid_to"]) if has_invalid_to else (
             py_validate(None) if invalid_to_default else None)
         out_t = core.output_type
         if isinstance(out_t, st.NullType):
             # identity-typed validators (enum, any) over a MISSING input
             # column: input_type is NullType, so out_t would be VOID and
-            # F.lit(default).cast(VOID) fails analysis — infer the output
+            # CAST(default AS VOID) fails analysis — infer the output
             # type from the pre-validated python fallback instead, so the
             # default/invalid_to fills every row as the reference does.
             probe = null_result if null_result is not None else fallback
@@ -168,74 +191,71 @@ class SparkCompiler:
                 out_t = {str: st.StringType(), bool: st.BooleanType(),
                          int: st.LongType(), float: st.DoubleType()} \
                     .get(type(probe), out_t)
-        null_lit = F.lit(null_result).cast(out_t)
-        fallback_lit = F.lit(fallback).cast(out_t) if suppress else None
+        out_sql = sql_type(out_t)
+        null_lit = cast(lit(null_result), out_sql)
+        fallback_lit = cast(lit(fallback), out_sql) if suppress else None
+        typed_none = typed_null(out_t)
 
         str_input = isinstance(input_type, st.StringType)
 
-        def is_null(col: Column) -> Column:
+        def is_null(col: str) -> str:
             if core.accept_string and str_input:
-                return col.isNull() | (col == "")
-            return col.isNull()
+                return or_(f"isnull({col})", f"{col} = ''")
+            return f"isnull({col})"
 
         # post-validate null recheck (pyx:397-408): a coerced result that is
         # null/'' counts as missing again.
-        def post_null(val: Column) -> Column:
+        def post_null(val: str) -> str:
             if core.accept_string and isinstance(out_t, st.StringType):
-                return val.isNull() | (val == "")
-            return val.isNull()
+                return or_(f"isnull({val})", f"{val} = ''")
+            return f"isnull({val})"
 
-        def core_invalid(col: Column) -> Column:
-            # cheap boolean equivalent of core.error(col).isNotNull(),
+        def core_invalid(col: str) -> str:
+            # cheap boolean equivalent of core.error(col) IS NOT NULL,
             # valid for non-null inputs (the wrapper guards nulls)
             if core.invalid is not None:
                 return core.invalid(col)
-            return core.error(col, F.lit("")).isNotNull()
+            return f"isnotnull({core.error(col, lit(''))})"
 
-        def value(col: Column) -> Column:
+        def value(col: str) -> str:
             coerced = core.coerce(col)
-            ok_val = F.when(core_invalid(col) | post_null(coerced),
-                            fallback_lit if suppress else
-                            (null_lit if (has_default or optional)
-                             else F.lit(None).cast(out_t))
-                            ).otherwise(coerced)
-            if has_default or optional:
-                return F.when(is_null(col), null_lit).otherwise(ok_val)
+            ok_val = case(or_(core_invalid(col), post_null(coerced)),
+                          fallback_lit if suppress else
+                          (null_lit if nullable else typed_none), coerced)
+            if nullable:
+                return case(is_null(col), null_lit, ok_val)
             if suppress:
-                return F.when(is_null(col), fallback_lit).otherwise(ok_val)
-            return F.when(is_null(col), F.lit(None).cast(out_t)).otherwise(ok_val)
+                return case(is_null(col), fallback_lit, ok_val)
+            return case(is_null(col), typed_none, ok_val)
 
-        def error(col: Column, pos: Column) -> Column:
+        def error(col: str, pos: str) -> str:
             if suppress:
-                return NULL_VIOLATION()
-            required = mkviol(f"{path}.required", pos, "required",
+                return NULL_VIOLATION
+            required = mkviol(lit(f"{path}.required"), pos, "'required'",
                               value_repr(col, input_type))
             core_err = core.error(col, pos)
-            coerced = core.coerce(col)
-            not_null_branch = F.when(core_err.isNotNull(), core_err).otherwise(
-                F.when(post_null(coerced),
-                       NULL_VIOLATION() if (has_default or optional) else required
-                       ).otherwise(NULL_VIOLATION()))
-            if has_default or optional:
-                return F.when(is_null(col), NULL_VIOLATION()).otherwise(
-                    not_null_branch)
-            return F.when(is_null(col), required).otherwise(not_null_branch)
+            not_null_branch = case(
+                f"isnotnull({core_err})", core_err,
+                case(post_null(core.coerce(col)),
+                     NULL_VIOLATION if nullable else required,
+                     NULL_VIOLATION))
+            if nullable:
+                return case(is_null(col), NULL_VIOLATION, not_null_branch)
+            return case(is_null(col), required, not_null_branch)
 
-        def invalid(col: Column) -> Column:
+        def invalid(col: str) -> str:
             if suppress:
-                return F.lit(False)
+                return "false"
             bad = core_invalid(col)
-            if not (has_default or optional):
-                bad = bad | post_null(core.coerce(col))
-            if has_default or optional:
-                return F.when(is_null(col), F.lit(False)).otherwise(bad)
-            return F.when(is_null(col), F.lit(True)).otherwise(bad)
+            if not nullable:
+                bad = or_(bad, post_null(core.coerce(col)))
+            return case(is_null(col), "false" if nullable else "true", bad)
 
         # whole-array fast paths survive the wrapper only when the wrapper
         # adds no element-level semantics: a null element must mean
         # 'required' (core.array_invalid flags it) and the coerced element
         # must be the plain core coercion.
-        plain = not (optional or has_default or suppress)
+        plain = not (nullable or suppress)
         arr_inv = core.array_invalid if plain else None
         arr_val = core.array_value if plain else None
         return NodePlan(out_t, value, error, invalid, arr_inv, arr_val)
@@ -243,7 +263,7 @@ class SparkCompiler:
     # ------------------------------------------------------------------
     # containers
     # ------------------------------------------------------------------
-    def _dict_core(self, schema: Schema, input_type, path: str) -> CoreRule:
+    def _dict_core(self, schema: Schema, input_type, path: str) -> SqlRule:
         items = schema.items or {}
         prefix = f"{path}." if path else ""
         if isinstance(input_type, st.MapType):
@@ -266,18 +286,8 @@ class SparkCompiler:
             # static type mismatch: every non-null value is 'must be dict'
             out_t = st.StructType([st.StructField(k, st.NullType())
                                    for k in items]) if items else input_type
-
-            def coerce(col):
-                return F.lit(None).cast(out_t)
-
-            def error(col, pos):
-                return F.when(col.isNotNull(),
-                              mkviol(f"{path}.type", pos, "must be dict",
-                                     value_repr(col, input_type))
-                              ).otherwise(NULL_VIOLATION())
-
-            return CoreRule(out_t, coerce, error, accept_string=False,
-                            string_output=False)
+            return self._type_mismatch_core(input_type, path, "must be dict",
+                                            out_t)
 
         field_types = {f.name: f.dataType for f in input_type.fields}
         children = {}
@@ -288,34 +298,33 @@ class SparkCompiler:
                                for k, c in children.items()])
 
         def getf(col, k):
-            if k in field_types:
-                return col.getField(k)
-            return F.lit(None)
+            return _field(col, k) if k in field_types else "NULL"
 
         def coerce(col):
-            return F.struct(*[children[k].value(getf(col, k)).alias(k)
-                              for k in children])
+            return "named_struct(" + ", ".join(
+                f"{lit(k)}, {c.value(getf(col, k))}"
+                for k, c in children.items()) + ")"
 
         def error(col, pos):
             # fail-fast in field order (dict validator, pyx:580-582)
-            errs = [children[k].error(getf(col, k),
-                                      F.concat(pos, F.lit(f".{k}"))
-                                      if path else F.lit(k))
-                    for k in children]
-            first = F.coalesce(*errs, NULL_VIOLATION()) if errs else NULL_VIOLATION()
-            return F.when(col.isNotNull(), first).otherwise(NULL_VIOLATION())
+            errs = [c.error(getf(col, k), _pos(pos, f".{k}") if path
+                            else lit(k))
+                    for k, c in children.items()]
+            first = f"coalesce({', '.join(errs + [NULL_VIOLATION])})"
+            return case(f"isnotnull({col})", first, NULL_VIOLATION)
 
-        return CoreRule(out_t, coerce, error, accept_string=False,
-                        string_output=False)
+        return SqlRule(out_t, coerce, error, accept_string=False,
+                       string_output=False)
 
     def _map_core(self, schema: Schema, input_type: st.MapType,
-                  path: str) -> CoreRule:
+                  path: str) -> SqlRule:
         """Dynamic dict over a MapType column: ``.key(schema)`` /
         ``.value(schema)`` validate every entry, ``slim`` drops null/''
         values, minlen/maxlen bound the entry count (reference dynamic-dict
         semantics, pyx:544-596).  Key/value rules must be expression-backed
         (Catalyst forbids UDFs inside lambda higher-order functions) —
-        email-style UDF validators in a map schema raise at plan time.
+        email-style UDF validators in a map schema raise SchemaError at
+        plan time.
         """
         from .schema import _as_schema
 
@@ -337,71 +346,64 @@ class SparkCompiler:
         def coerce(col):
             out = col
             if key_rule:
-                out = F.transform_keys(out, lambda k, v: key_rule.value(k))
+                out = f"transform_keys({out}, " \
+                      f"{lam(lambda k, v: key_rule.value(k), 2)})"
             if val_rule:
-                out = F.transform_values(out, lambda k, v: val_rule.value(v))
+                out = f"transform_values({out}, " \
+                      f"{lam(lambda k, v: val_rule.value(v), 2)})"
             if slim:
                 if isinstance(val_out, st.StringType):
-                    out = F.map_filter(
-                        out, lambda k, v: v.isNotNull() & (v != ""))
+                    keep = lam(lambda k, v: and_(f"isnotnull({v})",
+                                                 not_(f"{v} = ''")), 2)
                 else:
-                    out = F.map_filter(out, lambda k, v: v.isNotNull())
+                    keep = lam(lambda k, v: f"isnotnull({v})", 2)
+                out = f"map_filter({out}, {keep})"
             return out
 
         def error(col, pos):
             checks = []
-            n = F.size(col)
+            n = f"size({col})"
             if maxlen >= 0:
-                checks.append((n > maxlen, "maxlen",
+                checks.append((f"{n} > {maxlen}", "maxlen",
                                f"dict length must <= {maxlen}"))
             if minlen > 0:
-                checks.append((n < minlen, "minlen",
+                checks.append((f"{n} < {minlen}", "minlen",
                                f"dict length must >= {minlen}"))
             length_viol = chain(col, pos, input_type, checks, path)
 
             def entry_err(e):
                 errs = []
                 if key_rule:
-                    kpos = (F.concat(pos, F.lit(".$self_key")) if path
-                            else F.lit("$self_key"))
-                    errs.append(key_rule.error(e.getField("key"), kpos))
+                    kpos = (_pos(pos, ".$self_key") if path
+                            else lit("$self_key"))
+                    errs.append(key_rule.error(_field(e, "key"), kpos))
                 if val_rule:
-                    kname = e.getField("key").cast("string")
-                    vpos = (F.concat(pos, F.lit("."), kname) if path
+                    kname = cast(_field(e, "key"), "STRING")
+                    vpos = (f"concat({pos}, '.', {kname})" if path
                             else kname)
-                    errs.append(val_rule.error(e.getField("value"), vpos))
+                    errs.append(val_rule.error(_field(e, "value"), vpos))
                 if not errs:
-                    return NULL_VIOLATION()
-                return F.coalesce(*errs)
+                    return NULL_VIOLATION
+                return f"coalesce({', '.join(errs)})"
 
-            first_entry = F.get(
-                F.filter(F.transform(F.map_entries(col), entry_err),
-                         lambda x: x.isNotNull()), 0)
-            return F.when(col.isNull(), NULL_VIOLATION()).otherwise(
-                F.coalesce(length_viol, first_entry, NULL_VIOLATION()))
+            first_entry = (
+                f"get(filter(transform(map_entries({col}), {lam(entry_err)}), "
+                f"{lam(lambda x: f'isnotnull({x})')}), 0)")
+            return case(f"isnull({col})", NULL_VIOLATION,
+                        f"coalesce({length_viol}, {first_entry}, "
+                        f"{NULL_VIOLATION})")
 
-        return CoreRule(out_t, coerce, error, accept_string=False,
-                        string_output=False)
+        return SqlRule(out_t, coerce, error, accept_string=False,
+                       string_output=False)
 
-    def _list_core(self, schema: Schema, input_type, path: str) -> CoreRule:
+    def _list_core(self, schema: Schema, input_type, path: str) -> SqlRule:
         minlen = int(schema.params.get("minlen", 0))
         maxlen = int(schema.params.get("maxlen", 1024))
         unique = bool(schema.params.get("unique", False))
         inner_schema = schema.items
         if not isinstance(input_type, st.ArrayType):
-            out_t = st.ArrayType(st.NullType())
-
-            def coerce(col):
-                return F.lit(None).cast(out_t)
-
-            def error(col, pos):
-                return F.when(col.isNotNull(),
-                              mkviol(f"{path}.type", pos, "not list",
-                                     value_repr(col, input_type))
-                              ).otherwise(NULL_VIOLATION())
-
-            return CoreRule(out_t, coerce, error, accept_string=False,
-                            string_output=False)
+            return self._type_mismatch_core(input_type, path, "not list",
+                                            st.ArrayType(st.NullType()))
 
         et = input_type.elementType
         inner: Optional[NodePlan] = None
@@ -415,85 +417,85 @@ class SparkCompiler:
             if inner.array_value is not None:
                 # vectorized array cast — no per-element lambda
                 return inner.array_value(col)
-            return F.transform(col, lambda x: inner.value(x))
+            return f"transform({col}, {lam(inner.value)})"
 
         def error(col, pos):
-            n = F.size(col)
+            n = f"size({col})"
             checks = []
             if inner is not None:
                 # scan with the cheap boolean predicate; build the ONE
                 # violation struct only for the first offending element
                 # (vs a struct per element — 10-50× less work per row on
                 # long token arrays).
-                hof_pos1 = F.array_position(
-                    F.transform(col, lambda x: inner.invalid(x)),
-                    F.lit(True))                      # 1-based, 0 = none
+                # 1-based, 0 = none
+                hof_pos1 = (f"array_position(transform({col}, "
+                            f"{lam(inner.invalid)}), true)")
                 if inner.array_invalid is not None:
                     # cheap whole-array screen first: the interpreted
                     # per-element HOF runs only on flagged (~bad-rate) rows
-                    pos1 = F.when(inner.array_invalid(col), hof_pos1) \
-                        .otherwise(F.lit(0))
+                    pos1 = case(inner.array_invalid(col), hof_pos1, "0")
                 else:
                     pos1 = hof_pos1
-                bad_idx = (pos1 - 1).cast("int")
+                bad_idx = cast(f"{pos1} - 1", "INT")
                 first_elem = inner.error(
-                    F.get(col, bad_idx),
-                    F.concat(pos, F.lit("["), bad_idx.cast("string"),
-                             F.lit("]")))
+                    f"get({col}, {bad_idx})",
+                    f"concat({pos}, '[', {cast(bad_idx, 'STRING')}, ']')")
                 # element errors at index < maxlen fire before the length cap
-                elem_fires = (pos1 > 0) & (pos1 <= F.lit(maxlen))
+                elem_fires = and_(f"{pos1} > 0", f"{pos1} <= {maxlen}")
                 checks.append((elem_fires, first_elem))
             if unique:
                 if inner is None:
                     raise SchemaError(
                         "unable to check unique for non-hashable types")
                 coerced = coerce(col)
-                dup_flags = F.transform(
-                    coerced,
-                    lambda x, i: F.exists(F.slice(coerced, F.lit(1), i),
-                                          lambda p: p.eqNullSafe(x)))
-                dup_idx = F.array_position(dup_flags, F.lit(True)) - 1
+                dup_flags = (
+                    f"transform({coerced}, " + lam(
+                        lambda x, i: f"exists(slice({coerced}, 1, {i}), "
+                        + lam(lambda p: f"{p} <=> {x}") + ")", 2) + ")")
+                dup_idx = f"array_position({dup_flags}, true) - 1"
                 dup_viol = mkviol(
-                    f"{path}[].unique",
-                    F.concat(pos, F.lit("["), dup_idx.cast("string"),
-                             F.lit("]")),
-                    "not unique",
-                    value_repr(F.get(col, dup_idx.cast("int")), et))
-                checks.append(((dup_idx >= 0) & (dup_idx < maxlen), dup_viol))
+                    lit(f"{path}[].unique"),
+                    f"concat({pos}, '[', {cast(dup_idx, 'STRING')}, ']')",
+                    "'not unique'",
+                    value_repr(f"get({col}, {cast(dup_idx, 'INT')})", et))
+                checks.append((and_(f"{dup_idx} >= 0",
+                                    f"{dup_idx} < {maxlen}"), dup_viol))
             vrepr = value_repr(col, input_type)
-            checks.append((n > maxlen,
-                           mkviol(f"{path}.maxlen", pos,
-                                  f"list length must <= {maxlen}", vrepr)))
+            checks.append((f"{n} > {maxlen}",
+                           mkviol(lit(f"{path}.maxlen"), pos,
+                                  lit(f"list length must <= {maxlen}"),
+                                  vrepr)))
             if minlen > 0:
-                checks.append((n < minlen,
-                               mkviol(f"{path}.minlen", pos,
-                                      f"list length must >= {minlen}", vrepr)))
-            out = NULL_VIOLATION()
+                checks.append((f"{n} < {minlen}",
+                               mkviol(lit(f"{path}.minlen"), pos,
+                                      lit(f"list length must >= {minlen}"),
+                                      vrepr)))
+            out = NULL_VIOLATION
             for cond, viol in reversed(checks):
-                out = F.when(cond, viol).otherwise(out)
-            return F.when(col.isNull(), NULL_VIOLATION()).otherwise(out)
+                out = case(cond, viol, out)
+            return case(f"isnull({col})", NULL_VIOLATION, out)
 
         def list_invalid(col):
             # boolean twin of error(); a bad element at index ≥ maxlen
             # implies size > maxlen, so the union of conditions matches.
-            n = F.size(col)
-            inv = n > maxlen
+            n = f"size({col})"
+            inv = f"{n} > {maxlen}"
             if minlen > 0:
-                inv = inv | (n < minlen)
+                inv = or_(inv, f"{n} < {minlen}")
             if inner is not None:
                 if inner.array_invalid is not None:
-                    inv = inv | inner.array_invalid(col)
+                    inv = or_(inv, inner.array_invalid(col))
                 else:
-                    inv = inv | F.exists(col, lambda x: inner.invalid(x))
+                    inv = or_(inv, f"exists({col}, {lam(inner.invalid)})")
             if unique:
                 c = coerce(col)
-                inv = inv | (F.size(F.array_distinct(c)) < F.size(c))
-            return F.coalesce(inv, F.lit(False))
+                inv = or_(inv, f"size(array_distinct({c})) < size({c})")
+            return f"coalesce({inv}, false)"
 
-        return CoreRule(out_t, coerce, error, accept_string=False,
-                        string_output=False, invalid=list_invalid)
+        return SqlRule(out_t, coerce, error, accept_string=False,
+                       string_output=False, invalid=list_invalid)
 
-    def _union_core(self, schema: Schema, input_type, path: str) -> CoreRule:
+    def _union_core(self, schema: Schema, input_type, path: str) -> SqlRule:
         """union: tagged (dict) form dispatches on the `by` field of a struct
         column; list (shape) form dispatches statically on the Spark input
         type — Spark columns have exactly one type, so the runtime
@@ -522,43 +524,45 @@ class SparkCompiler:
 
             def tag_col(col):
                 if by in field_types:
-                    return col.getField(by).cast("string")
-                return F.lit(None).cast("string")
+                    return cast(_field(col, by), "STRING")
+                return typed_null(st.StringType())
 
             def coerce(col):
                 tc = tag_col(col)
-                result = F.lit(None).cast(out_t)
+                result = typed_null(out_t)
                 for tag, core in tags.items():
                     branch = core.coerce(col)
-                    fields = [F.lit(tag).alias(by)]
+                    names = {f_.name for f_ in core.output_type.fields}
+                    fields = [f"{lit(by)}, {lit(tag)}"]
                     for k, t in out_fields.items():
                         if k == by:
                             continue
-                        if k in [f_.name for f_ in core.output_type.fields]:
-                            fields.append(branch.getField(k).cast(t).alias(k))
-                        else:
-                            fields.append(F.lit(None).cast(t).alias(k))
-                    result = F.when(tc == tag, F.struct(*fields)).otherwise(result)
+                        val = (cast(_field(branch, k), sql_type(t))
+                               if k in names else typed_null(t))
+                        fields.append(f"{lit(k)}, {val}")
+                    result = case(f"{tc} = {lit(tag)}",
+                                  f"named_struct({', '.join(fields)})", result)
                 return result
 
             def error(col, pos):
                 tc = tag_col(col)
-                by_pos = F.concat(pos, F.lit(f".{by}")) if path else F.lit(by)
-                missing = mkviol(f"{path}.{by}.required" if path
-                                 else f"{by}.required",
-                                 by_pos, "required", F.lit("None"))
-                unknown = mkviol(f"{path}.{by}.enum" if path
-                                 else f"{by}.enum", by_pos,
-                                 f"expect one of {expect}",
+                by_pos = _pos(pos, f".{by}") if path else lit(by)
+                missing = mkviol(lit(f"{path}.{by}.required" if path
+                                     else f"{by}.required"),
+                                 by_pos, "'required'", "'None'")
+                unknown = mkviol(lit(f"{path}.{by}.enum" if path
+                                     else f"{by}.enum"), by_pos,
+                                 lit(f"expect one of {expect}"),
                                  value_repr(tc, st.StringType()))
                 out = unknown
                 for tag, core in tags.items():
-                    out = F.when(tc == tag, core.error(col, pos)).otherwise(out)
-                out = F.when(tc.isNull() | (tc == ""), missing).otherwise(out)
-                return F.when(col.isNull(), NULL_VIOLATION()).otherwise(out)
+                    out = case(f"{tc} = {lit(tag)}", core.error(col, pos),
+                               out)
+                out = case(or_(f"isnull({tc})", f"{tc} = ''"), missing, out)
+                return case(f"isnull({col})", NULL_VIOLATION, out)
 
-            return CoreRule(out_t, coerce, error, accept_string=False,
-                            string_output=False)
+            return SqlRule(out_t, coerce, error, accept_string=False,
+                           string_output=False)
 
         # list (shape) form: pick the branch whose shape matches input_type.
         # On a statically-typed column the reference's runtime shape
@@ -586,10 +590,10 @@ class SparkCompiler:
         if pick is None:
             return self._type_mismatch_core(input_type, path, reject)
         sub_plan = self.compile_node(pick, input_type, path)
-        return CoreRule(sub_plan.output_type, sub_plan.value, sub_plan.error,
-                        accept_string=False, string_output=False)
+        return SqlRule(sub_plan.output_type, sub_plan.value, sub_plan.error,
+                       accept_string=False, string_output=False)
 
-    def _union_variant_core(self, branches: dict, path: str) -> CoreRule:
+    def _union_variant_core(self, branches: dict, path: str) -> SqlRule:
         """Runtime shape-dispatched union over a VariantType column —
         reference-parity with pyx:695-709's per-VALUE dispatch.
 
@@ -630,67 +634,56 @@ class SparkCompiler:
         out_t = st.StructType([st.StructField(s, plan.output_type)
                                for s, (_, plan) in subs.items()])
 
-        def classify(col):
-            sov = F.schema_of_variant(col)
-            return (sov.startswith("ARRAY"),
-                    sov.startswith("OBJECT") | sov.startswith("STRUCT"))
+        def shape_conds(col):
+            sov = f"schema_of_variant({col})"
+            is_arr = f"startswith({sov}, 'ARRAY')"
+            is_obj = or_(f"startswith({sov}, 'OBJECT')",
+                         f"startswith({sov}, 'STRUCT')")
+            return {"list": is_arr, "dict": is_obj,
+                    "scalar": and_(not_(is_arr), not_(is_obj))}
 
         def _ext(col, in_t):
-            return F.try_variant_get(col, "$", in_t.simpleString())
+            return f"try_variant_get({col}, '$', {lit(in_t.simpleString())})"
 
-        def _shape_cond(shape, is_arr, is_obj):
-            if shape == "list":
-                return is_arr
-            if shape == "dict":
-                return is_obj
-            return ~is_arr & ~is_obj
+        def is_null(col):
+            return or_(f"isnull({col})", f"is_variant_null({col})")
 
         def coerce(col):
-            is_arr, is_obj = classify(col)
-            fields = []
-            for shape, (in_t, plan) in subs.items():
-                val = F.when(_shape_cond(shape, is_arr, is_obj),
-                             plan.value(_ext(col, in_t))) \
-                    .otherwise(F.lit(None).cast(plan.output_type))
-                fields.append(val.alias(shape))
-            return F.when(col.isNull() | F.is_variant_null(col),
-                          F.lit(None).cast(out_t)) \
-                .otherwise(F.struct(*fields))
+            conds = shape_conds(col)
+            fields = [f"{lit(shape)}, "
+                      + case(conds[shape], plan.value(_ext(col, in_t)),
+                             typed_null(plan.output_type))
+                      for shape, (in_t, plan) in subs.items()]
+            return case(is_null(col), typed_null(out_t),
+                        f"named_struct({', '.join(fields)})")
 
         def error(col, pos):
-            is_arr, is_obj = classify(col)
+            conds = shape_conds(col)
 
             def branch_err(shape, not_allowed):
                 if shape in subs:
                     in_t, plan = subs[shape]
                     return plan.error(_ext(col, in_t), pos)
-                return mkviol(f"{path}.type" if path else "type", pos,
-                              not_allowed,
+                return mkviol(lit(f"{path}.type" if path else "type"), pos,
+                              lit(not_allowed),
                               value_repr(_ext(col, st.StringType()),
                                          st.StringType()))
 
-            out = (F.when(is_arr, branch_err("list", "not allowed list"))
-                   .when(is_obj, branch_err("dict", "not allowed dict"))
-                   .otherwise(branch_err("scalar",
-                                         "not allowed scalar value")))
-            return F.when(col.isNull() | F.is_variant_null(col),
-                          NULL_VIOLATION()).otherwise(out)
+            out = case(conds["list"], branch_err("list", "not allowed list"),
+                       conds["dict"], branch_err("dict", "not allowed dict"),
+                       branch_err("scalar", "not allowed scalar value"))
+            return case(is_null(col), NULL_VIOLATION, out)
 
-        return CoreRule(out_t, coerce, error, accept_string=False,
-                        string_output=False)
+        return SqlRule(out_t, coerce, error, accept_string=False,
+                       string_output=False)
 
-    def _type_mismatch_core(self, input_type, path, message) -> CoreRule:
-        def coerce(col):
-            return F.lit(None).cast(input_type)
-
-        def error(col, pos):
-            return F.when(col.isNotNull(),
-                          mkviol(f"{path}.type", pos, message,
-                                 value_repr(col, input_type))
-                          ).otherwise(NULL_VIOLATION())
-
-        return CoreRule(input_type, coerce, error, accept_string=False,
-                        string_output=False)
+    def _type_mismatch_core(self, input_type, path, message,
+                            out_t: st.DataType | None = None) -> SqlRule:
+        out_t = input_type if out_t is None else out_t
+        return SqlRule(out_t, lambda col: typed_null(out_t),
+                       lambda col, pos: type_mismatch(
+                           col, pos, f"{path}.type", message, input_type),
+                       accept_string=False, string_output=False)
 
 
 class ValidationPlan:
@@ -716,6 +709,27 @@ class ValidationPlan:
         return json.dumps(self.schema.to_primitive(), sort_keys=True,
                           ensure_ascii=False)
 
+    def _build(self, in_types: dict, col_of: Callable[[str], str],
+               values: bool) -> tuple[dict, list[str], str]:
+        """SQL text of one validation projection: ``value AS name`` per
+        field (when ``values``) and the violations array, plus the
+        pre-projection ``{name: Column}`` the text refers to (pandas-UDF
+        and Column-API rules).  No JVM call happens here."""
+        outs, errs = [], []
+        with building() as ctx:
+            for name, sub in self.schema.items.items():
+                node = self.compiler.compile_node(
+                    sub, in_types.get(name, st.NullType()), name)
+                src = col_of(name) if name in in_types else "NULL"
+                if values:
+                    outs.append(f"{node.value(src)} AS {q(name)}")
+                errs.append(node.error(src, lit(name)))
+            no_viol = cast("array()", sql_type(st.ArrayType(VIOLATION_TYPE)))
+            viol = (f"filter(array({', '.join(errs)}), "
+                    f"{lam(lambda e: f'isnotnull({e})')})" if errs
+                    else no_viol)
+        return ctx.columns(), outs, viol
+
     def apply(self, df: DataFrame, id_cols: list[str] | None = None,
               violation_col: str = "_violations") -> "ValidationResult":
         """One projection: coerced schema columns + violations array.
@@ -731,18 +745,11 @@ class ValidationPlan:
         renames = {name: f"__vs_in_{name}" for name in self.schema.items
                    if name in in_types}
         src = df.withColumnsRenamed(renames) if renames else df
-        out_cols: list[Column] = [F.col(c) for c in id_cols
-                                  if c not in self.schema.items]
-        err_cols: list[Column] = []
-        for name, sub in self.schema.items.items():
-            node = self.compiler.compile_node(
-                sub, in_types.get(name, st.NullType()), name)
-            col = F.col(renames[name]) if name in in_types else F.lit(None)
-            out_cols.append(node.value(col).alias(name))
-            err_cols.append(node.error(col, F.lit(name)))
-        viol = F.filter(F.array(*err_cols), lambda e: e.isNotNull()) \
-            if err_cols else F.array().cast(st.ArrayType(VIOLATION_TYPE))
-        annotated = src.select(*out_cols, viol.alias(violation_col))
+        pre, outs, viol = self._build(in_types, lambda n: colref(renames[n]),
+                                      True)
+        annotated = _with_pre(src, pre).select(
+            *[F.col(c) for c in id_cols if c not in self.schema.items],
+            *map(F.expr, outs), F.expr(f"{viol} AS {q(violation_col)}"))
         return ValidationResult(annotated, id_cols, violation_col)
 
     def flag(self, df: DataFrame,
@@ -758,15 +765,16 @@ class ValidationPlan:
         one map-side projection, zero shuffle at any scale.
         """
         in_types = {f.name: f.dataType for f in df.schema.fields}
-        err_cols: list[Column] = []
-        for name, sub in self.schema.items.items():
-            node = self.compiler.compile_node(
-                sub, in_types.get(name, st.NullType()), name)
-            col = F.col(name) if name in in_types else F.lit(None)
-            err_cols.append(node.error(col, F.lit(name)))
-        viol = F.filter(F.array(*err_cols), lambda e: e.isNotNull()) \
-            if err_cols else F.array().cast(st.ArrayType(VIOLATION_TYPE))
-        return df.withColumn(violation_col, viol)
+        pre, _, viol = self._build(in_types, colref, False)
+        out = _with_pre(df, pre).withColumn(violation_col, F.expr(viol))
+        return out.drop(*pre) if pre else out
+
+
+def _with_pre(df: DataFrame, pre: dict) -> DataFrame:
+    """``df`` plus the pre-projected columns a plan's text refers to."""
+    if not pre:
+        return df
+    return df.select("*", *[c.alias(n) for n, c in pre.items()])
 
 
 class ValidationResult:

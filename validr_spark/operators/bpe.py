@@ -169,16 +169,20 @@ def save_merges(merges: list[tuple[str, str]], path: str) -> None:
 
 
 def load_merges(path: str) -> list[tuple[str, str]]:
-    """Read a GPT-2/huggingface-format ``merges.txt`` merge table —
-    the interop point for validating corpora against a REAL pretrained
-    tokenizer's merges (``apply_bpe(df, load_merges("merges.txt"))``).
-    ``#``-prefixed header lines and blank lines are skipped; each
-    remaining line must be exactly two space-separated symbols."""
+    """Read a merge table in the GPT-2/huggingface ``merges.txt`` file
+    format (``apply_bpe(df, load_merges("merges.txt"))``).  Only the file
+    format is shared: this engine's pre-tokenizer is whitespace/char
+    level, so token ids need not match a byte-level GPT-2 tokenizer's.
+
+    A ``#version`` header on the FIRST line and blank lines are skipped;
+    every other line, ``#``-prefixed ones included (``# #`` is a real
+    merge of two ``#`` symbols), must be exactly two space-separated
+    symbols."""
     merges: list[tuple[str, str]] = []
     with open(path, encoding="utf-8") as f:
         for lineno, line in enumerate(f, 1):
             line = line.rstrip("\n")
-            if not line or line.startswith("#"):
+            if not line or (lineno == 1 and line.startswith("#version")):
                 continue
             parts = line.split(" ")
             if len(parts) != 2 or not parts[0] or not parts[1]:

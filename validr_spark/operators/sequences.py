@@ -29,7 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..compiler import SparkCompiler
+from ..rules import case
 from ..schema import T
+from ..sqltext import lit
 
 
 def rowlevel_schema(vocab: int, maxlen: int, sources: list[str],
@@ -103,31 +105,34 @@ def build_report_queries(df: DataFrame, dim: DataFrame, *, vocab: int,
                          maxlen: int = 8192, sources: list[str],
                          max_id_len: int = 64,
                          max_n_tok: int | None = None) -> dict:
-    """Build (don't run) the three verdict queries; see sequence_report."""
+    """Build (don't run) the three verdict queries; see sequence_report.
+
+    Expressions are SQL text (one JVM call each, see validr_spark.sqltext)
+    rather than chains of Column calls, which cost py4j round trips per
+    node; the plans are the same."""
     from .uniqueness import duplication_report
 
     plan = SparkCompiler().compile(
         rowlevel_schema(vocab, maxlen, sources, max_id_len, max_n_tok))
-    dimj = F.broadcast(dim.select("source").withColumn("_in_dim", F.lit(1)))
+    dimj = F.broadcast(dim.selectExpr("source", "1 AS _in_dim"))
 
     # pass 1: row-level checks + verdict dimensions (scan-bound, codegen)
     res = plan.apply(
-        df.withColumn("_n_tok_raw", F.col("n_tok"))
-          .withColumn("_size_raw", F.size("tokens"))
-          .withColumn("_src_raw", F.col("source")),
+        df.selectExpr("*", "n_tok AS _n_tok_raw", "size(tokens) AS _size_raw",
+                      "source AS _src_raw"),
         id_cols=["_n_tok_raw", "_size_raw", "_src_raw"])
-    nviol = F.size("_violations")
+    nviol = "size(_violations)"
     agg1 = (res.df
             .join(dimj, res.df["source"] == dimj["source"], "left")
             .groupBy("_src_raw")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum("_size_raw").alias("n_tokens"),
-                 F.sum(nviol).alias("n_row_violations"),
-                 F.sum(F.when(nviol > 0, 1).otherwise(0)).alias("n_bad_rows"),
-                 F.sum(F.when(F.col("_in_dim").isNull(), 1).otherwise(0))
-                  .alias("n_orphans"),
-                 F.sum(F.when(F.col("_n_tok_raw") != F.col("_size_raw"), 1)
-                       .otherwise(0)).alias("n_inconsistent")))
+            .agg(*map(F.expr, [
+                "count(1) AS n_rows",
+                "sum(_size_raw) AS n_tokens",
+                f"sum({nviol}) AS n_row_violations",
+                f"sum({case(f'{nviol} > 0', '1', '0')}) AS n_bad_rows",
+                f"sum({case('isnull(_in_dim)', '1', '0')}) AS n_orphans",
+                f"sum({case('(NOT _n_tok_raw = _size_raw)', '1', '0')})"
+                " AS n_inconsistent"])))
 
     # pass 2: token-range counts per source (codegen explode pipeline;
     # only bad tokens reach the partial agg).  The source STRING is
@@ -141,27 +146,24 @@ def build_report_queries(df: DataFrame, dim: DataFrame, *, vocab: int,
     # they're referential violations) take a separate pre-filtered branch
     # that groups by the raw string so their counts are attributed, not
     # silently dropped.
-    src_id = F.when(F.col("source").isNull(), F.lit(-1)).otherwise(F.lit(-2))
+    src_id = case("isnull(source)", "-1", "-2")
     for k, s in enumerate(sources):
-        src_id = F.when(F.col("source") == s, F.lit(k)).otherwise(src_id)
-    x = F.col("_x")
-    known = (df.filter(F.col("source").isin(sources)
-                       | F.col("source").isNull())
-             .select(src_id.alias("_sid"), F.explode("tokens").alias("_x"))
-             .filter(x.isNull() | (x < 0) | (x >= vocab))
+        src_id = case(f"source = {lit(s)}", str(k), src_id)
+    listed = f"source IN ({', '.join(map(lit, sources))})"
+    bad_token = f"isnull(_x) OR _x < 0 OR _x >= {vocab}"
+    known = (df.filter(f"{listed} OR isnull(source)")
+             .selectExpr(f"{src_id} AS _sid", "explode(tokens) AS _x")
+             .filter(bad_token)
              .groupBy("_sid")
-             .agg(F.count(F.lit(1)).alias("n_token_violations"))
-             .select("_sid", F.lit(None).cast("string").alias("_src_unk"),
-                     "n_token_violations"))
-    unknown = (df.filter(~F.col("source").isin(sources)
-                         & F.col("source").isNotNull())
-               .select(F.col("source").alias("_src_unk"),
-                       F.explode("tokens").alias("_x"))
-               .filter(x.isNull() | (x < 0) | (x >= vocab))
+             .agg(F.expr("count(1) AS n_token_violations"))
+             .selectExpr("_sid", "CAST(NULL AS STRING) AS _src_unk",
+                         "n_token_violations"))
+    unknown = (df.filter(f"(NOT {listed}) AND isnotnull(source)")
+               .selectExpr("source AS _src_unk", "explode(tokens) AS _x")
+               .filter(bad_token)
                .groupBy("_src_unk")
-               .agg(F.count(F.lit(1)).alias("n_token_violations"))
-               .select(F.lit(-2).alias("_sid"), "_src_unk",
-                       "n_token_violations"))
+               .agg(F.expr("count(1) AS n_token_violations"))
+               .selectExpr("-2 AS _sid", "_src_unk", "n_token_violations"))
     agg2 = known.unionByName(unknown)
     return {"agg1": agg1, "agg2": agg2,
             "dup": duplication_report(df, "doc_id"),

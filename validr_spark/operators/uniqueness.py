@@ -50,13 +50,13 @@ def duplication_report(df: DataFrame, keys: list[str] | str) -> DataFrame:
     surplus rows (rows that would be dropped by dedup)."""
     if isinstance(keys, str):
         keys = [keys]
-    per_key = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-    return per_key.agg(
-        F.sum("n").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_keys"),
-        F.sum(F.when(F.col("n") > 1, 1).otherwise(0)).alias("n_dup_keys"),
-        F.sum(F.col("n") - 1).alias("n_surplus_rows"),
-    )
+    # SQL text: one JVM call per aggregate instead of one per Column node
+    per_key = df.groupBy(*keys).agg(F.expr("count(1) AS n"))
+    return per_key.agg(*map(F.expr, [
+        "sum(n) AS n_rows",
+        "count(1) AS n_keys",
+        "sum(`when`(n > 1, 1, 0)) AS n_dup_keys",
+        "sum(n - 1) AS n_surplus_rows"]))
 
 
 def uniqueness_screen(df: DataFrame, key: str) -> DataFrame:

@@ -1,21 +1,28 @@
 """Per-validator Catalyst rule builders.
 
-Each builder compiles one schema leaf into a `CoreRule`:
+Each builder compiles one schema leaf into a `SqlRule`:
 
-* ``coerce(col) -> Column`` — the coerced output value, null when the value
+* ``coerce(col) -> str`` — the coerced output value, null when the value
   cannot be coerced;
-* ``error(col, pos) -> Column`` — the FIRST failing check as a violation
+* ``error(col, pos) -> str`` — the FIRST failing check as a violation
   struct ``(rule_id, position, message, value)`` or null, evaluated in the
   same order as the reference validator raises (fail-fast per value,
   guyskk/validr `_validator_c.pyx` §2.3 of SURVEY.md);
 * ``output_type`` — the Spark output type.
 
-Everything here is a pure Column expression (JVM-side, whole-stage codegen).
-The handful of validators whose coercion cannot be expressed in Catalyst with
-exact reference parity (email, ipv6, timedelta, date/time/datetime with
-Python strptime leniency) are built on a vectorized pandas UDF over the
-`validr_spark.pyvalidate` backend — one Arrow batch at a time, never
-row-at-a-time Python.
+Arguments and results are Spark SQL expression TEXT (see `sqltext`): a
+plan is built without a single JVM call and handed to Catalyst once per
+output column.  Everything here is a pure Catalyst expression (JVM-side,
+whole-stage codegen).  The handful of validators whose coercion cannot be
+expressed in Catalyst with exact reference parity (email, ipv6, timedelta,
+date/time/datetime with Python strptime leniency) are built on a
+vectorized pandas UDF over the `validr_spark.pyvalidate` backend — one
+Arrow batch at a time, never row-at-a-time Python — evaluated in a
+pre-projection and referred to by column name.
+
+Custom builders (``SparkCompiler(validators=...)``) may still return a
+`CoreRule` whose callbacks take and return pyspark Columns; the compiler
+evaluates those in the same pre-projection (see `column_rule`).
 
 All expressions are ANSI-mode-safe (Spark 4 default): every fallible cast is
 a try_cast, array access uses `get`/`try_element_at`.
@@ -23,12 +30,10 @@ a try_cast, array access uses `get`/`try_element_at`.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 from typing import Callable
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as st
 from pyspark.sql.functions import pandas_udf
@@ -37,9 +42,10 @@ from .errors import VALUE_CLIP, SchemaError
 from .pyvalidate import FALSE_VALUES, TRUE_VALUES
 from .pyvalidate import Compiler as PyCompiler
 from .schema import Schema
+from .sqltext import and_, cast, lit, not_, or_, precompute, typed_null
 
 # ---------------------------------------------------------------------------
-# violation struct helpers
+# violation struct helpers (SQL text)
 # ---------------------------------------------------------------------------
 
 VIOLATION_TYPE = st.StructType([
@@ -49,48 +55,55 @@ VIOLATION_TYPE = st.StructType([
     st.StructField("value", st.StringType()),
 ])
 
-def NULL_VIOLATION() -> Column:
-    """Typed null violation (lazy: Column creation needs an active session)."""
-    return F.lit(None).cast(VIOLATION_TYPE)
+# typed null violation
+NULL_VIOLATION = typed_null(VIOLATION_TYPE)
 
 
-def _as_col(x, caster="string") -> Column:
-    return x if isinstance(x, Column) else F.lit(x)
+def mkviol(rule_id: str, pos: str, message: str, value: str) -> str:
+    """Violation struct from four STRING-typed SQL expressions."""
+    return (f"named_struct('rule_id', {rule_id}, 'position', {pos}, "
+            f"'message', {message}, 'value', {value})")
 
 
-def mkviol(rule_id, pos, message, value) -> Column:
-    return F.struct(
-        _as_col(rule_id).cast("string").alias("rule_id"),
-        _as_col(pos).cast("string").alias("position"),
-        _as_col(message).cast("string").alias("message"),
-        _as_col(value).cast("string").alias("value"),
-    )
+def case(*args: str) -> str:
+    """``F.when(c1, v1).when(c2, v2)...otherwise(e)`` from ``c1, v1, c2, v2,
+    ..., [e]``.  Written as the backquoted function ``when`` rather than
+    ``CASE WHEN ... END``: CASE is a non-reserved keyword, so the SQL
+    parser cannot tell ``CASE WHEN`` from a column named ``case`` until it
+    has read the whole branch — a look-ahead that grows with nesting and
+    whose cached prediction states exhaust the driver heap on deeply
+    nested validation plans.  A quoted function name is read in two
+    tokens and builds the same ``CaseWhen``."""
+    return f"`when`({', '.join(args)})"
 
 
-def clip_str(col: Column) -> Column:
+def clip_str(col: str) -> str:
     """Shorten to 75 chars + '..' (reference pyx:20-23)."""
-    return F.when(F.length(col) > VALUE_CLIP,
-                  F.concat(F.substring(col, 1, VALUE_CLIP), F.lit("..")),
-                  ).otherwise(col)
+    return case(f"length({col}) > {VALUE_CLIP}",
+                f"concat(`substring`({col}, 1, {VALUE_CLIP}), '..')", col)
 
 
-def value_repr(col: Column, input_type: st.DataType) -> Column:
+def value_repr(col: str, input_type: st.DataType) -> str:
     """Offending-value string: quoted+clipped for strings, str() otherwise."""
     if isinstance(input_type, st.StringType):
-        return F.when(col.isNull(), F.lit("None")).otherwise(
-            F.concat(F.lit("'"), clip_str(col), F.lit("'")))
-    return F.when(col.isNull(), F.lit("None")).otherwise(
-        clip_str(col.cast("string")))
+        quote = lit("'")
+        return case(f"isnull({col})", "'None'",
+                    f"concat({quote}, {clip_str(col)}, {quote})")
+    return case(f"isnull({col})", "'None'",
+                clip_str(cast(col, "STRING")))
 
 
 @dataclass
 class CoreRule:
-    """Compiled core of one schema node (before the null/default wrapper)."""
+    """Compiled core of one schema node (before the null/default wrapper),
+    with pyspark-Column callbacks: the contract of custom builders passed
+    as ``SparkCompiler(validators=...)``.  Built-in builders return the
+    SQL-text twin, `SqlRule`."""
 
     output_type: st.DataType
-    coerce: Callable[[Column], Column]
+    coerce: Callable
     # error(col, pos) -> violation struct | null. col is the RAW input.
-    error: Callable[[Column, Column], Column]
+    error: Callable
     accept_string: bool = True    # '' counts as null for this rule
     string_output: bool = True    # null-output is '' instead of None
     # containers set this to re-wrap children at apply time
@@ -98,25 +111,58 @@ class CoreRule:
     # optional cheap boolean predicate: true iff error() would be non-null.
     # Containers use it to scan elements WITHOUT building a violation
     # struct per element (the struct is built once, for the first offender).
-    invalid: Callable[[Column], Column] | None = None
+    invalid: Callable | None = None
     # optional WHOLE-ARRAY fast paths, defined on array<input_type> columns.
     # Catalyst lambda HOFs (transform/filter/exists) evaluate interpreted at
     # ~20µs/element; array_min/array_max/cast are tight JVM loops ~10×
     # faster, and the per-element HOF then runs only on flagged rows.
-    array_invalid: Callable[[Column], Column] | None = None   # any elem bad?
-    array_value: Callable[[Column], Column] | None = None     # coerce array
+    array_invalid: Callable | None = None   # any elem bad?
+    array_value: Callable | None = None     # coerce array
 
 
-def chain(col: Column, pos: Column, input_type: st.DataType,
-          checks: list[tuple[Column, str, object]], path: str) -> Column:
+@dataclass
+class SqlRule(CoreRule):
+    """`CoreRule` whose callbacks take and return Spark SQL text."""
+
+
+def column_rule(core: CoreRule, path: str) -> SqlRule:
+    """SQL-text view of a Column-API rule: each callback's Column is
+    evaluated once per (input, position) in the plan's pre-projection and
+    referred to by name.  Such a rule cannot run per element of a list or
+    map (SchemaError).  Whole-array fast paths are dropped: they only serve
+    the per-element scan."""
+    what = f"validator of {path!r}"
+
+    def pre(kind, *args):
+        fn = getattr(core, kind)
+        return precompute((id(core), kind) + args,
+                          lambda: fn(*[F.expr(a) for a in args]), what)
+
+    invalid = (lambda col: pre("invalid", col)) if core.invalid else None
+    return SqlRule(core.output_type, lambda col: pre("coerce", col),
+                   lambda col, pos: pre("error", col, pos),
+                   accept_string=core.accept_string,
+                   string_output=core.string_output, invalid=invalid)
+
+
+def chain(col: str, pos: str, input_type: st.DataType,
+          checks: list[tuple[str, str, str]], path: str) -> str:
     """First failing check wins (validr is fail-fast within one value)."""
     vrepr = value_repr(col, input_type)
-    out = NULL_VIOLATION()
+    out = NULL_VIOLATION
     for fail_cond, rule_suffix, message in reversed(checks):
         rid = path + rule_suffix if rule_suffix.startswith("[") \
             else f"{path}.{rule_suffix}"
-        out = F.when(fail_cond, mkviol(rid, pos, message, vrepr)).otherwise(out)
+        out = case(fail_cond, mkviol(lit(rid), pos, lit(message), vrepr), out)
     return out
+
+
+def type_mismatch(col: str, pos: str, rule_id: str, message: str,
+                  input_type: st.DataType) -> str:
+    """Every non-null value violates (static input-type mismatch)."""
+    return case(f"isnotnull({col})",
+                mkviol(lit(rule_id), pos, lit(message),
+                       value_repr(col, input_type)), NULL_VIOLATION)
 
 
 # ---------------------------------------------------------------------------
@@ -125,10 +171,7 @@ def chain(col: Column, pos: Column, input_type: st.DataType,
 
 _INT_STR_RE = r"\A\s*[+-]?\d+\s*\z"
 LONG_MIN, LONG_MAX = -(2 ** 63), 2 ** 63 - 1
-
-
-def _num_lit(v):
-    return F.lit(v)
+_INTEGRAL = (st.ByteType, st.ShortType, st.IntegerType, st.LongType)
 
 
 def build_int(sc, schema, input_type, path):
@@ -143,58 +186,57 @@ def build_int(sc, schema, input_type, path):
     # fast path: integral input with int64-safe bounds → pure LONG math.
     # (decimal(38,0) per-element comparisons are ~10× slower in codegen and
     # the tokens[] hot loop runs this per token at 10^12-row scale.)
-    integral_input = isinstance(
-        input_type, (st.ByteType, st.ShortType, st.IntegerType, st.LongType,
-                     st.BooleanType))
-    fast = integral_input and LONG_MIN <= lo and hi <= LONG_MAX
+    fast = (isinstance(input_type, _INTEGRAL + (st.BooleanType,))
+            and LONG_MIN <= lo and hi <= LONG_MAX)
 
     if isinstance(input_type, st.StringType):
-        def coerce(col):
-            return F.when(col.rlike(_INT_STR_RE),
-                          F.trim(col).try_cast("decimal(38,0)")
-                          ).otherwise(F.lit(None)).try_cast("long")
-
         def parsed(col):
-            return F.when(col.rlike(_INT_STR_RE),
-                          F.trim(col).try_cast("decimal(38,0)")
-                          ).otherwise(F.lit(None))
+            return case(f"{col} RLIKE {lit(_INT_STR_RE)}",
+                        f"try_cast(`trim`({col}) AS DECIMAL(38,0))", "NULL")
+
+        def coerce(col):
+            return f"try_cast({parsed(col)} AS BIGINT)"
     elif isinstance(input_type, (st.FloatType, st.DoubleType)):
         def coerce(col):
-            ok = ~(F.isnan(col) | (F.abs(col) == float("inf")))
+            ok = not_(or_(f"isnan({col})",
+                          f"abs({col}) = {lit(float('inf'))}"))
             # int() truncates toward zero
-            return F.when(ok, col).otherwise(F.lit(None)).try_cast("long")
+            return f"try_cast({case(ok, col, 'NULL')} AS BIGINT)"
 
         def parsed(col):
-            return coerce(col).cast("decimal(38,0)")
+            return f"CAST({coerce(col)} AS DECIMAL(38,0))"
     else:  # integral / boolean / decimal
         def coerce(col):
-            return col.try_cast("long")
+            return f"try_cast({col} AS BIGINT)"
 
         def parsed(col):
-            return col.try_cast("long" if fast else "decimal(38,0)")
+            to = "BIGINT" if fast else "DECIMAL(38,0)"
+            return f"try_cast({col} AS {to})"
 
     def _bound_lit(v):
-        return F.lit(v) if fast else F.lit(v).cast("decimal(38,0)")
+        return lit(v) if fast else f"CAST({lit(v)} AS DECIMAL(38,0))"
 
     has_lo = lo > -(2 ** 64 - 1) or lo >= LONG_MIN
     has_hi = hi < 2 ** 64 - 1 or hi <= LONG_MAX
 
     def error(col, pos):
         v = parsed(col)
-        checks = [(v.isNull(), "type", "invalid int")]
+        checks = [(f"isnull({v})", "type", "invalid int")]
         if has_lo:
-            checks.append((v < _bound_lit(lo), "min", f"value must >= {lo}"))
+            checks.append((f"{v} < {_bound_lit(lo)}", "min",
+                           f"value must >= {lo}"))
         if has_hi:
-            checks.append((v > _bound_lit(hi), "max", f"value must <= {hi}"))
+            checks.append((f"{v} > {_bound_lit(hi)}", "max",
+                           f"value must <= {hi}"))
         return chain(col, pos, input_type, checks, path)
 
     def invalid(col):
         v = parsed(col)
-        cond = v.isNull()
+        cond = f"isnull({v})"
         if has_lo:
-            cond = cond | (v < _bound_lit(lo))
+            cond = or_(cond, f"{v} < {_bound_lit(lo)}")
         if has_hi:
-            cond = cond | (v > _bound_lit(hi))
+            cond = or_(cond, f"{v} > {_bound_lit(hi)}")
         return cond
 
     array_invalid = array_value = None
@@ -206,21 +248,26 @@ def build_int(sc, schema, input_type, path):
             # vs a long literal is a plan-time DATATYPE_MISMATCH); numeric
             # integral arrays compare directly — the cast would copy the
             # whole array per row for nothing.
-            larr = (arr.cast("array<long>")
+            larr = (f"CAST({arr} AS ARRAY<BIGINT>)"
                     if isinstance(input_type, st.BooleanType) else arr)
-            cond = F.size(F.array_compact(arr)) < F.size(arr)
+            cond = f"size(array_compact({arr})) < size({arr})"
             if has_lo:
-                cond = cond | (F.array_min(larr) < F.lit(lo))
+                cond = or_(cond, f"array_min({larr}) < {lit(lo)}")
             if has_hi:
-                cond = cond | (F.array_max(larr) > F.lit(hi))
-            return F.coalesce(cond, F.lit(False))
+                cond = or_(cond, f"array_max({larr}) > {lit(hi)}")
+            return f"coalesce({cond}, false)"
 
         def array_value(arr):
-            return arr.cast("array<long>")
+            return f"CAST({arr} AS ARRAY<BIGINT>)"
 
-    return CoreRule(st.LongType(), coerce, error, accept_string=True,
-                    string_output=False, invalid=invalid,
-                    array_invalid=array_invalid, array_value=array_value)
+    return SqlRule(st.LongType(), coerce, error, accept_string=True,
+                   string_output=False, invalid=invalid,
+                   array_invalid=array_invalid, array_value=array_value)
+
+
+def _in(col: str, items) -> str:
+    """``col.isin(items)``."""
+    return f"{col} IN ({', '.join(lit(i) for i in items)})"
 
 
 def build_bool(sc, schema, input_type, path):
@@ -229,29 +276,38 @@ def build_bool(sc, schema, input_type, path):
             return col
 
         def error(col, pos):
-            return NULL_VIOLATION()
+            return NULL_VIOLATION
     elif isinstance(input_type, st.StringType):
         trues = sorted(v for v in TRUE_VALUES if isinstance(v, str))
         falses = sorted(v for v in FALSE_VALUES if isinstance(v, str))
 
         def coerce(col):
-            return (F.when(col.isin(trues), F.lit(True))
-                    .when(col.isin(falses), F.lit(False)))
+            return case(_in(col, trues), "true", _in(col, falses), "false")
 
         def error(col, pos):
             return chain(col, pos, input_type,
-                         [(~col.isin(trues + falses), "type", "invalid bool")],
-                         path)
+                         [(not_(_in(col, trues + falses)), "type",
+                           "invalid bool")], path)
     else:  # numeric: only 0/1 accepted
         def coerce(col):
-            return (F.when(col == 1, F.lit(True))
-                    .when(col == 0, F.lit(False)))
+            return case(f"{col} = 1", "true", f"{col} = 0", "false")
 
         def error(col, pos):
             return chain(col, pos, input_type,
-                         [(~col.isin(0, 1), "type", "invalid bool")], path)
+                         [(not_(_in(col, [0, 1])), "type",
+                           "invalid bool")], path)
 
-    return CoreRule(st.BooleanType(), coerce, error, string_output=False)
+    return SqlRule(st.BooleanType(), coerce, error, string_output=False)
+
+
+def _bound_msg(fmt: str, bound: float) -> str:
+    # '%d' of ±inf/NaN raises; such a bound's check can never fire
+    # (inf) or fires on every row (-inf min / inf max are the never-fire
+    # direction), so any text will do
+    try:
+        return fmt % bound
+    except (OverflowError, ValueError):
+        return fmt.replace("%d", repr(bound))
 
 
 def build_float(sc, schema, input_type, path):
@@ -274,32 +330,45 @@ def build_float(sc, schema, input_type, path):
         hi, exmax = float(exmax), True
 
     def coerce(col):
-        v = col.try_cast("double")
-        return F.when(~F.isnan(v), v)
+        v = f"try_cast({col} AS DOUBLE)"
+        return case(not_(f"isnan({v})"), v)
 
     def error(col, pos):
-        v = col.try_cast("double")
-        checks = [(v.isNull() | F.isnan(v), "type", "invalid float")]
+        v = f"try_cast({col} AS DOUBLE)"
+        checks = [(or_(f"isnull({v})", f"isnan({v})"), "type",
+                   "invalid float")]
         if exmin:
-            checks.append((v <= lo, "min", "value must > %d" % lo))
+            checks.append((f"{v} <= {lit(lo)}", "min",
+                           _bound_msg("value must > %d", lo)))
         else:
-            checks.append((v < lo, "min", "value must >= %d" % lo))
+            checks.append((f"{v} < {lit(lo)}", "min",
+                           _bound_msg("value must >= %d", lo)))
         if exmax:
-            checks.append((v >= hi, "max", "value must < %d" % hi))
+            checks.append((f"{v} >= {lit(hi)}", "max",
+                           _bound_msg("value must < %d", hi)))
         else:
-            checks.append((v > hi, "max", "value must <= %d" % hi))
+            checks.append((f"{v} > {lit(hi)}", "max",
+                           _bound_msg("value must <= %d", hi)))
         return chain(col, pos, input_type, checks, path)
 
-    return CoreRule(st.DoubleType(), coerce, error, string_output=False)
+    return SqlRule(st.DoubleType(), coerce, error, string_output=False)
 
 
 _WS = r"[\s\u0085\u00a0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
 
 
-def _py_strip(col: Column) -> Column:
-    """Python str.strip() equivalent (F.trim only strips ASCII spaces)."""
-    return F.regexp_replace(F.regexp_replace(col, f"\\A{_WS}+", ""),
-                            f"{_WS}+\\z", "")
+_LSTRIP = lit(f"\\A{_WS}+")
+_RSTRIP = lit(f"{_WS}+\\z")
+
+
+def _py_strip(col: str) -> str:
+    """Python str.strip() equivalent (trim() only strips ASCII spaces)."""
+    left = f"regexp_replace({col}, {_LSTRIP}, '')"
+    return f"regexp_replace({left}, {_RSTRIP}, '')"
+
+
+def _not_rlike(col: str, pattern: str) -> str:
+    return not_(f"{col} RLIKE {lit(pattern)}")
 
 
 def build_str(sc, schema, input_type, path, accept_any_object=False):
@@ -318,44 +387,40 @@ def build_str(sc, schema, input_type, path, accept_any_object=False):
     str_input = isinstance(input_type, st.StringType)
     # str accepts int always; nstr accepts any object (cast to string)
     can_cast = accept_any_object or isinstance(
-        input_type, (st.ByteType, st.ShortType, st.IntegerType, st.LongType,
-                     st.BooleanType, st.NullType)) or str_input
+        input_type, _INTEGRAL + (st.BooleanType, st.NullType)) or str_input
 
     def base(col):
-        s = col if str_input else col.cast("string")
+        s = col if str_input else cast(col, "STRING")
         return _py_strip(s) if strip else s
 
     def coerce(col):
         if not can_cast:
-            return F.lit(None).cast("string")
+            return typed_null(st.StringType())
         s = base(col)
         if escape:
             for old, new in (("&", "&amp;"), (">", "&gt;"), ("<", "&lt;"),
                              ("'", "&#39;"), ('"', "&#34;")):
-                s = F.replace(s, F.lit(old), F.lit(new))
+                s = f"replace({s}, {lit(old)}, {lit(new)})"
         return s
 
     def error(col, pos):
         if not can_cast:
-            return F.when(col.isNotNull(),
-                          mkviol(f"{path}.type", pos, "invalid string",
-                                 value_repr(col, input_type))
-                          ).otherwise(NULL_VIOLATION())
-        s = base(col)
-        n = F.char_length(s)
+            return type_mismatch(col, pos, f"{path}.type", "invalid string",
+                                 input_type)
+        n = f"char_length({base(col)})"
         checks = []
         if minlen > 0:
-            checks.append((n < minlen, "minlen",
+            checks.append((f"{n} < {minlen}", "minlen",
                            f"string length must >= {minlen}"))
-        checks.append((n > maxlen, "maxlen",
+        checks.append((f"{n} > {maxlen}", "maxlen",
                        f"string length must <= {maxlen}"))
         if match is not None:
-            target = coerce(col)  # escape applied before match (pyx:894-901)
-            checks.append((~target.rlike(f"\\A(?:{match})\\z"), "match",
-                           f"string not match regex {match}"))
+            # escape applied before match (pyx:894-901)
+            checks.append((_not_rlike(coerce(col), f"\\A(?:{match})\\z"),
+                           "match", f"string not match regex {match}"))
         return chain(col, pos, input_type, checks, path)
 
-    return CoreRule(st.StringType(), coerce, error, string_output=True)
+    return SqlRule(st.StringType(), coerce, error, string_output=True)
 
 
 def build_nstr(sc, schema, input_type, path):
@@ -375,26 +440,24 @@ def build_bytes(sc, schema, input_type, path):
     is_bin = isinstance(input_type, st.BinaryType)
 
     def coerce(col):
-        return col if is_bin else F.lit(None).cast("binary")
+        return col if is_bin else typed_null(st.BinaryType())
 
     def error(col, pos):
         if not is_bin:
-            return F.when(col.isNotNull(),
-                          mkviol(f"{path}.type", pos, "invalid bytes",
-                                 value_repr(col, input_type))
-                          ).otherwise(NULL_VIOLATION())
-        n = F.octet_length(col)
+            return type_mismatch(col, pos, f"{path}.type", "invalid bytes",
+                                 input_type)
+        n = f"octet_length({col})"
         checks = []
         if minlen > 0:
-            checks.append((n < minlen, "minlen",
+            checks.append((f"{n} < {minlen}", "minlen",
                            f"bytes length must >= {minlen}"))
         if maxlen > -1:
-            checks.append((n > maxlen, "maxlen",
+            checks.append((f"{n} > {maxlen}", "maxlen",
                            f"bytes length must <= {maxlen}"))
         return chain(col, pos, input_type, checks, path)
 
-    return CoreRule(st.BinaryType(), coerce, error, accept_string=False,
-                    string_output=False)
+    return SqlRule(st.BinaryType(), coerce, error, accept_string=False,
+                   string_output=False)
 
 
 def _enum_repr(value):
@@ -424,37 +487,34 @@ def build_enum(sc, schema, input_type, path):
     # (True == 1 == 1.0) — which Spark's numeric-family coercion matches.
     if isinstance(input_type, st.StringType):
         cmp_items = [i for i in items if isinstance(i, str)]
-    elif isinstance(input_type, (st.BooleanType, st.ByteType, st.ShortType,
-                                 st.IntegerType, st.LongType, st.FloatType,
-                                 st.DoubleType, st.DecimalType)):
+    elif isinstance(input_type, _INTEGRAL + (
+            st.BooleanType, st.FloatType, st.DoubleType, st.DecimalType)):
         cmp_items = [i for i in items
                      if isinstance(i, (bool, int, float))]
     else:
         cmp_items = list(items)
 
     def member(col):
-        if not cmp_items:
-            # no item can equal a value of this type: every non-null
-            # value is an enum violation
-            return F.lit(False)
-        return col.isin(cmp_items)
+        # no item can equal a value of this type: every non-null value is
+        # an enum violation
+        return _in(col, cmp_items) if cmp_items else "false"
 
     def coerce(col):
-        return F.when(member(col), col)
+        return case(member(col), col)
 
     def error(col, pos):
         return chain(col, pos, input_type,
-                     [(~member(col), "enum", msg)], path)
+                     [(not_(member(col)), "enum", msg)], path)
 
     # reference enum uses default accept hints → '' counts as null
-    return CoreRule(input_type, coerce, error, accept_string=True,
-                    string_output=False)
+    return SqlRule(input_type, coerce, error, accept_string=True,
+                   string_output=False)
 
 
 def build_any(sc, schema, input_type, path):
-    return CoreRule(input_type, lambda col: col,
-                    lambda col, pos: NULL_VIOLATION(),
-                    accept_string=False, string_output=False)
+    return SqlRule(input_type, lambda col: col,
+                   lambda col, pos: NULL_VIOLATION,
+                   accept_string=False, string_output=False)
 
 
 # --- regex-factory validators (phone / idcard / slug) ----------------------
@@ -473,28 +533,25 @@ def make_regex_builder(name: str, pattern: str, default_maxlen: int):
 
         def coerce(col):
             if not str_input:
-                return F.lit(None).cast("string")
+                return typed_null(st.StringType())
             return base(col)
 
         def error(col, pos):
             if not str_input:
-                return F.when(col.isNotNull(),
-                              mkviol(f"{path}.type", pos,
-                                     "value must be string",
-                                     value_repr(col, input_type))
-                              ).otherwise(NULL_VIOLATION())
+                return type_mismatch(col, pos, f"{path}.type",
+                                     "value must be string", input_type)
             s = base(col)
-            n = F.char_length(s)
+            n = f"char_length({s})"
             checks = []
             if minlen > 0:
-                checks.append((n < minlen, "minlen",
+                checks.append((f"{n} < {minlen}", "minlen",
                                f"{name} length must >= {minlen}"))
-            checks.append((n > maxlen, "maxlen",
+            checks.append((f"{n} > {maxlen}", "maxlen",
                            f"{name} length must <= {maxlen}"))
-            checks.append((~s.rlike(anchored), name, f"invalid {name}"))
+            checks.append((_not_rlike(s, anchored), name, f"invalid {name}"))
             return chain(col, pos, input_type, checks, path)
 
-        return CoreRule(st.StringType(), coerce, error)
+        return SqlRule(st.StringType(), coerce, error)
 
     return build
 
@@ -515,15 +572,18 @@ def build_ipv4(sc, schema, input_type, path):
     compares verdicts on ipv4 fields for this reason)."""
     def coerce(col):
         s = _py_strip(col)
-        return F.when(s.rlike(_IPV4_RE), s)
+        return case(f"{s} RLIKE {lit(_IPV4_RE)}", s)
 
     def error(col, pos):
-        s = _py_strip(col)
         return chain(col, pos, input_type,
-                     [(~s.rlike(_IPV4_RE), "ipv4", "invalid ipv4 address")],
-                     path)
+                     [(_not_rlike(_py_strip(col), _IPV4_RE), "ipv4",
+                       "invalid ipv4 address")], path)
 
-    return CoreRule(st.StringType(), coerce, error)
+    return SqlRule(st.StringType(), coerce, error)
+
+
+_BRACES = lit(r"\A[{}]+|[{}]+\z")
+_HEX32 = lit(r"\A[0-9a-f]{32}\z")
 
 
 def build_uuid(sc, schema, input_type, path):
@@ -541,73 +601,82 @@ def build_uuid(sc, schema, input_type, path):
         # braces at the ends, remove EVERY hyphen (uuid.UUID accepts
         # hyphens at any position, not just the canonical ones), then
         # require exactly 32 hex digits.
-        s = _py_strip(col)
-        s = F.regexp_replace(s, r"urn:|uuid:", "")
-        s = F.regexp_replace(s, r"\A[{}]+|[{}]+\z", "")
-        s = F.lower(F.regexp_replace(s, "-", ""))
-        return F.when(s.rlike(r"\A[0-9a-f]{32}\z"), s)
+        s = f"regexp_replace({_py_strip(col)}, 'urn:|uuid:', '')"
+        s = f"regexp_replace({s}, {_BRACES}, '')"
+        s = f"lower(regexp_replace({s}, '-', ''))"
+        return case(f"{s} RLIKE {_HEX32}", s)
+
+    def version_ok(h):
+        return f"`substring`({h}, 13, 1) = {lit(str(version))}"
 
     def coerce(col):
         h = hex32(col)
-        canon = F.concat_ws(
-            "-", F.substring(h, 1, 8), F.substring(h, 9, 4),
-            F.substring(h, 13, 4), F.substring(h, 17, 4), F.substring(h, 21, 12))
-        ok = h.isNotNull()
+        parts = ", ".join(f"`substring`({h}, {p}, {n})" for p, n in
+                          ((1, 8), (9, 4), (13, 4), (17, 4), (21, 12)))
+        canon = f"concat_ws('-', {parts})"
+        ok = f"isnotnull({h})"
         if version is not None:
-            ok = ok & (F.substring(h, 13, 1) == str(version))
-        return F.when(ok, canon)
+            ok = and_(ok, version_ok(h))
+        return case(ok, canon)
 
     def error(col, pos):
         h = hex32(col)
-        bad = h.isNull()
+        bad = f"isnull({h})"
         if version is not None:
-            bad = bad | (F.substring(h, 13, 1) != str(version))
+            bad = or_(bad, not_(version_ok(h)))
         return chain(col, pos, input_type, [(bad, "uuid", msg)], path)
 
-    return CoreRule(st.StringType(), coerce, error)
+    return SqlRule(st.StringType(), coerce, error)
 
 
 _FQDN_RE = (r"\A(?:(?!-)[A-Za-z0-9-]{1,63}(?<!-)\.)+"
             r"(?!-)[A-Za-z0-9-]{1,63}(?<!-)\z")
 
 
+_TRAILING_DOT = lit(r"\.\z")
+
+
 def build_fqdn(sc, schema, input_type, path):
     def relative(col):
-        s = F.regexp_replace(_py_strip(col), r"\.\z", "")
-        return F.when(s.rlike(_FQDN_RE) & (F.char_length(s) <= 253), s)
-
-    def coerce(col):
-        return relative(col)
+        s = f"regexp_replace({_py_strip(col)}, {_TRAILING_DOT}, '')"
+        return case(and_(f"{s} RLIKE {lit(_FQDN_RE)}",
+                         f"char_length({s}) <= 253"), s)
 
     def error(col, pos):
         return chain(col, pos, input_type,
-                     [(relative(col).isNull(), "fqdn", "invalid fqdn")], path)
+                     [(f"isnull({relative(col)})", "fqdn", "invalid fqdn")],
+                     path)
 
-    return CoreRule(st.StringType(), coerce, error)
+    return SqlRule(st.StringType(), relative, error)
+
+
+_SCHEME_RE = r"\A([A-Za-z][A-Za-z0-9+.-]*):"
 
 
 def build_url(sc, schema, input_type, path):
     allow = set(str(schema.params.get("scheme", "http https")).split())
     maxlen = int(schema.params.get("maxlen", 255))
 
+    def scheme(s):
+        return f"lower(regexp_extract({s}, {lit(_SCHEME_RE)}, 1))"
+
     def coerce(col):
         s = _py_strip(col)
-        scheme = F.lower(F.regexp_extract(s, r"\A([A-Za-z][A-Za-z0-9+.-]*):", 1))
-        return F.when(scheme.isin(sorted(allow))
-                      & (F.char_length(s) <= maxlen), s)
+        return case(and_(_in(scheme(s), sorted(allow)),
+                         f"char_length({s}) <= {maxlen}"), s)
 
     def error(col, pos):
         s = _py_strip(col)
-        scheme = F.lower(F.regexp_extract(s, r"\A([A-Za-z][A-Za-z0-9+.-]*):", 1))
+        sch = scheme(s)
         checks = [
-            (F.char_length(s) > maxlen, "maxlen",
+            (f"char_length({s}) > {maxlen}", "maxlen",
              f"url length must <= {maxlen}"),
-            ((scheme == "") | ~scheme.isin(sorted(allow)), "scheme",
+            (or_(f"{sch} = ''", not_(_in(sch, sorted(allow)))), "scheme",
              f"invalid url scheme, expect {allow}"),
         ]
         return chain(col, pos, input_type, checks, path)
 
-    return CoreRule(st.StringType(), coerce, error)
+    return SqlRule(st.StringType(), coerce, error)
 
 
 # ---------------------------------------------------------------------------
@@ -637,7 +706,8 @@ def build_pyudf_rule(sc, schema, input_type, path, output_type=None,
     whose coercion Catalyst can't express (IDNA email, ipv6 compression,
     Go-duration strings, Python-strptime leniency).
 
-    One pandas UDF per schema node returning struct<value, message>; the
+    One pandas UDF per schema node returning struct<value, message>,
+    evaluated in the plan's pre-projection and referred to by name; the
     Spark-side wrapper still handles null/optional/default/invalid_to, so
     the UDF only sees the core check.
     """
@@ -681,18 +751,21 @@ def build_pyudf_rule(sc, schema, input_type, path, output_type=None,
                 messages.append(ex.message or f"invalid {validator_name}")
         return pd.DataFrame({"value": values, "message": messages})
 
+    def result(col):
+        return precompute((_udf, col), lambda: _udf(F.expr(col)),
+                          f"{validator_name} validator of {path!r}")
+
     def coerce(col):
-        return _udf(col)["value"]
+        return f"{result(col)}['value']"
 
     def error(col, pos):
-        msg = _udf(col)["message"]
-        return F.when(msg.isNotNull(),
-                      mkviol(f"{path}.{validator_name}", pos, msg,
-                             value_repr(col, input_type))
-                      ).otherwise(NULL_VIOLATION())
+        msg = f"{result(col)}['message']"
+        return case(f"isnotnull({msg})",
+                    mkviol(lit(f"{path}.{validator_name}"), pos, msg,
+                           value_repr(col, input_type)), NULL_VIOLATION)
 
-    return CoreRule(output_type, coerce, error, accept_string=accept_string,
-                    string_output=string_output)
+    return SqlRule(output_type, coerce, error, accept_string=accept_string,
+                   string_output=string_output)
 
 
 def build_timedelta(sc, schema, input_type, path):
@@ -703,6 +776,8 @@ def build_timedelta(sc, schema, input_type, path):
     if isinstance(input_type, (st.IntegerType, st.LongType, st.FloatType,
                                st.DoubleType)) and not string_out:
         # numeric seconds input, seconds output: pure expression path
+        import datetime as _dt
+
         from .duration import format_duration as _fmt
         from .pyvalidate import _coerce_timedelta
         lo = schema.params.get("min")
@@ -717,26 +792,26 @@ def build_timedelta(sc, schema, input_type, path):
             raise SchemaError("invalid max timedelta") from ex
 
         def coerce(col):
-            v = col.try_cast("double")
+            v = f"try_cast({col} AS DOUBLE)"
             # NaN is not a duration: reference timedelta(seconds=nan)
             # raises -> Invalid; without this mask NaN would leak through
             # coerce and dodge the min check (NaN < lo is false)
-            return F.when(~F.isnan(v), v)
+            return case(not_(f"isnan({v})"), v)
 
         def error(col, pos):
-            v = col.try_cast("double")
-            checks = [(F.isnan(v), "timedelta", "invalid timedelta")]
+            v = f"try_cast({col} AS DOUBLE)"
+            checks = [(f"isnan({v})", "timedelta", "invalid timedelta")]
             if lo_s is not None:
-                import datetime as _dt
-                checks.append((v < lo_s, "min", "value must >= " + _fmt(
-                    _dt.timedelta(seconds=lo_s), extended=True)))
+                checks.append((f"{v} < {lit(lo_s)}", "min", "value must >= "
+                               + _fmt(_dt.timedelta(seconds=lo_s),
+                                      extended=True)))
             if hi_s is not None:
-                import datetime as _dt
-                checks.append((v > hi_s, "max", "value must <= " + _fmt(
-                    _dt.timedelta(seconds=hi_s), extended=True)))
+                checks.append((f"{v} > {lit(hi_s)}", "max", "value must <= "
+                               + _fmt(_dt.timedelta(seconds=hi_s),
+                                      extended=True)))
             return chain(col, pos, input_type, checks, path)
 
-        return CoreRule(st.DoubleType(), coerce, error, string_output=False)
+        return SqlRule(st.DoubleType(), coerce, error, string_output=False)
     out_t = st.StringType() if string_out else st.DoubleType()
     return build_pyudf_rule(sc, schema, input_type, path, output_type=out_t,
                             string_output=string_out)
